@@ -193,16 +193,21 @@ case class AvroEncodeWire(child: Expression, schemaId: Int, schemaJson: String)
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = child.dataType.asInstanceOf[StructType]
   @transient private lazy val writer = new GenericDatumWriter[GenericRecord](avroSchema)
-  @transient private var encoder: BinaryEncoder = _
+  // One frame buffer per expression instance: the header is written into
+  // it ahead of the body, so each row copies its frame out exactly once.
+  @transient private lazy val header = AvroWire.frame(schemaId, Array.emptyByteArray)
+  @transient private lazy val buffer = new ByteArrayOutputStream()
+  @transient private lazy val encoder: BinaryEncoder =
+    EncoderFactory.get().directBinaryEncoder(buffer, null)
 
   override def nullSafeEval(input: Any): Any = {
     val row = input.asInstanceOf[InternalRow]
     val rec = CatalystToAvro.convert(row, structType, avroSchema).asInstanceOf[GenericRecord]
-    val bos = new ByteArrayOutputStream()
-    encoder = EncoderFactory.get().directBinaryEncoder(bos, encoder)
+    buffer.reset()
+    buffer.write(header)
     writer.write(rec, encoder)
     encoder.flush()
-    AvroWire.frame(schemaId, bos.toByteArray)
+    buffer.toByteArray
   }
 
   override protected def withNewChildInternal(newChild: Expression): AvroEncodeWire =

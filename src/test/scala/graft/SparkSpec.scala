@@ -20,6 +20,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(Engine.LocalFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -22,6 +22,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      .config(graft.Engine.LocalFsConf)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
   }

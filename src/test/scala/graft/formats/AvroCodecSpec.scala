@@ -228,6 +228,32 @@ class AvroCodecSpec extends SparkSpec {
       Seq((1L, "alice"), (2L, "bob"), (3L, "carol")))
   }
 
+  test("wire codec: encoded frames are byte-equal to AvroWire.frame over a fresh Avro body, nulls included") {
+    val reg = new SchemaRegistry
+    val r2 = reg.register("user-value", v2Json)
+    val rows = Seq((1L, "a-rather-long-name-first", Some(0.5)), (2L, "bo", None),
+      (3L, "null struct", None), (4L, "", Some(-1.25)))
+    val encoded = rows.toDF("id", "name", "score")
+      .select(col("id"), AvroFunctions.toAvroWire(
+        when(col("id") =!= 3L, struct(col("id"), col("name"), col("score"))), r2).as("payload"))
+      .orderBy("id").collect().map(r => Option(r.getAs[Array[Byte]](1)).map(_.toSeq)).toSeq
+
+    val schema = new org.apache.avro.Schema.Parser().parse(v2Json)
+    val expected = rows.map { case (id, name, score) =>
+      if (id == 3L) None
+      else {
+        val rec = new org.apache.avro.generic.GenericData.Record(schema)
+        rec.put("id", id); rec.put("name", name); rec.put("score", score.map(Double.box).orNull)
+        val bos = new java.io.ByteArrayOutputStream()
+        val enc = org.apache.avro.io.EncoderFactory.get().directBinaryEncoder(bos, null)
+        new org.apache.avro.generic.GenericDatumWriter[AnyRef](schema).write(rec, enc)
+        enc.flush()
+        Some(AvroWire.frame(r2.id, bos.toByteArray).toSeq)
+      }
+    }
+    assert(encoded == expected)
+  }
+
   test("wire codec: per-record schema-id dispatch decodes mixed v1+v2 with v2 reader") {
     val reg = new SchemaRegistry
     val r1 = reg.register("user-value", v1Json)

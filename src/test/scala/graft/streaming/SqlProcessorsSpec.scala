@@ -58,6 +58,7 @@ class SqlProcessorsSpec extends SparkSpec {
       .appName("graft-sql-tvf-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      .config(graft.Engine.LocalFsConf)
       .withExtensions(new graft.catalyst.GraftExtensions)
       .getOrCreate()
     val pipes = new Pipelines(Files.createTempDirectory("sqlp-tvf").toString)
@@ -108,6 +109,7 @@ class SqlProcessorsSpec extends SparkSpec {
       .appName("graft-sql-ann-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      .config(graft.Engine.LocalFsConf)
       .withExtensions(new graft.catalyst.GraftExtensions)
       .getOrCreate()
     val pipes = new Pipelines(Files.createTempDirectory("sqlp-ann").toString)
@@ -144,6 +146,7 @@ class SqlProcessorsSpec extends SparkSpec {
       .appName("graft-sql-curation-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      .config(graft.Engine.LocalFsConf)
       .withExtensions(new graft.catalyst.GraftExtensions)
       .getOrCreate()
     val pipes = new Pipelines(Files.createTempDirectory("sqlp-cur").toString)
@@ -182,6 +185,7 @@ class SqlProcessorsSpec extends SparkSpec {
       .appName("graft-sql-decon-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      .config(graft.Engine.LocalFsConf)
       .withExtensions(new graft.catalyst.GraftExtensions)
       .getOrCreate()
     val pipes = new Pipelines(Files.createTempDirectory("sqlp-dec").toString)

@@ -153,6 +153,32 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("pipelines: a graft-rate dedup processor stopped mid-stream and restarted under its name commits each key exactly once") {
+    val root = Files.createTempDirectory("graft-restart")
+    val sink = root.resolve("sink")
+    val pipes = new Pipelines(root.resolve("ck").toString)
+    val opts = RateDedupPipeline.options(advancePerBatchSeconds = 2)
+    try {
+      // stop() interrupts whichever batch is running, so each run may leave
+      // an offset logged but not committed for the next run to replay
+      val q1 = RateDedupPipeline.start(spark, pipes, "rate_dedup", sink, opts)
+      try RateDedupPipeline.awaitBatches(q1, 3) finally pipes.stop("rate_dedup")
+      val (committed1, _) = RateDedupPipeline.committedEnd(sink, pipes.checkpointDir("rate_dedup"))
+      val q2 = RateDedupPipeline.start(spark, pipes, "rate_dedup", sink, opts)
+      try RateDedupPipeline.awaitBatches(q2, 3) finally pipes.stop("rate_dedup")
+      assert(q2.recentProgress.head.batchId > 0, "the restart must resume from the checkpoint")
+
+      val (committed, seconds) = RateDedupPipeline.committedEnd(sink, pipes.checkpointDir("rate_dedup"))
+      assert(committed > committed1)
+      assert(committed == graft.sources.RateConf(opts).cumulative(seconds))
+      val expectedKeys = (committed + 1) / 2
+      val r = spark.read.parquet(sink.toString)
+        .agg(count(lit(1)), countDistinct(col("k")), min(col("k")), max(col("k"))).head()
+      assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+        (expectedKeys, expectedKeys, 0L, expectedKeys - 1))
+    } finally pipes.stopAll()
+  }
+
   test("dedupStream drops exact duplicates within the watermark") {
     val in = MemoryStream[(Timestamp, Long)]
     val out = StreamOps.dedupStream(in.toDF().toDF("ts", "id"), "ts", "10 minutes", Seq("id"))
