@@ -73,20 +73,6 @@ object CacheScope {
 
   private def keyOf(ds: Dataset[_]) = ds.queryExecution.analyzed.canonicalized
 
-  private val warnedLegacy = new java.util.concurrent.atomic.AtomicBoolean(false)
-  /** The r12 root-cause bisect toggle, checked per call (tools set it in
-    * main before any release). A stray `-D` flag must not be silent: the
-    * first observation logs LOUDLY, because this path re-enables a proven
-    * wrong-answer concurrency window (ADVICE r12). */
-  private def legacyRelease: Boolean = {
-    val on = sys.props.contains("graft.cachescope.legacyRelease")
-    if (on && warnedLegacy.compareAndSet(false, true))
-      System.err.println("[graft] WARNING: graft.cachescope.legacyRelease is set — " +
-        "DIAGNOSTIC-ONLY release path active; concurrent sessions can return " +
-        "silently EMPTY results (the r12 root-caused defect). Never set in production.")
-    on
-  }
-
   // --- OPT-IN shared scope (r13; hardened r14) -----------------------------
   // Under worker isolation (the Tables scope tag) cache entries are never
   // shared, so the per-key refcount sees every consumer. Under the OPT-IN
@@ -282,16 +268,7 @@ object CacheScope {
     * block-removal mark — which is exactly why the lock is per-key, not
     * global (ADVICE r12). */
   def releaseOne(ds: Dataset[_]): Unit =
-    if (legacyRelease) {
-      // DIAGNOSTIC ONLY (r12 root-cause bisect): the pre-r12 behavior —
-      // zero-decision atomically, unpersist OUTSIDE the atomic section.
-      var free = false
-      refCounts.compute(keyOf(ds), (_, v) => {
-        val left = (if (v == null) 0 else v.intValue) - 1
-        if (left <= 0) { free = true; null } else Integer.valueOf(left)
-      })
-      if (free) ds.unpersist(false)
-    } else threadScope.get() match {
+    threadScope.get() match {
       case Some(id) =>
         // shared scope: NEVER unpersist while the scope lives — a sibling
         // may be consuming this entry through a lookup the refcount

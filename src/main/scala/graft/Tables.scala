@@ -86,8 +86,8 @@ object Tables {
     * partition-completion counter marks the entry fully loaded — poisoned
     * RUNTIME STATISTICS over intact data. AQE's PropagateEmptyRelation
     * trusts those stats and rewrites dependent joins to EmptyRelation:
-    * silently empty/wrong results (ForcedStatsRace exhibits the chain
-    * deterministically; the pre-fix soak reproduced it ~1-in-3 runs).
+    * silently empty/wrong results (the pre-fix soak reproduced it
+    * ~1-in-3 runs; BASELINE.md "r12 ROOT CAUSE" records the chain).
     *
     * The fix is structural: every load is tagged with a THREAD-scoped
     * no-op projection (`withColumn(lit(scopeId)).drop`), so concurrent
@@ -98,25 +98,14 @@ object Tables {
     * unchanged-equal, so same-scope cache reuse still works. The tag is
     * dead code after analysis — CollapseProject removes it, so optimized
     * plans, pushdown, and PLANS.md pins are byte-identical. */
-  private val warnedNoTag = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def scopeTag(df: DataFrame): DataFrame =
-    if (sys.props.contains("graft.notag")) {
-      // DIAGNOSTIC ONLY (A/B bisects). A stray -D flag must not silently
-      // re-open the r12 silent-empty window — log loudly once (ADVICE r12).
-      if (warnedNoTag.compareAndSet(false, true))
-        System.err.println("[graft] WARNING: graft.notag is set — cache-scope " +
-          "isolation tag DISABLED; concurrent sessions share cache entries and " +
-          "can return silently EMPTY results (the r12 root-caused defect).")
-      df
-    } else {
-      // withColumn would silently REPLACE (then drop) a real column of the
-      // tagging name — data loss, not an error. No driver table carries
-      // one, but fail closed rather than open (ADVICE r12).
-      require(!df.columns.contains("__graft_scope"),
-        "loaded table already has a __graft_scope column — scope tagging would drop it")
-      df.withColumn("__graft_scope", lit(effectiveScope)).drop("__graft_scope")
-    }
+  private def scopeTag(df: DataFrame): DataFrame = {
+    // withColumn would silently REPLACE (then drop) a real column of the
+    // tagging name — data loss, not an error. No driver table carries
+    // one, but fail closed rather than open (ADVICE r12).
+    require(!df.columns.contains("__graft_scope"),
+      "loaded table already has a __graft_scope column — scope tagging would drop it")
+    df.withColumn("__graft_scope", lit(effectiveScope)).drop("__graft_scope")
+  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     scopeTag(spark.read.parquet(s"$sfDir/$name.parquet"))

@@ -223,25 +223,6 @@ object Dedup {
     val round0 = edges.select(col("_x").as("_id")).distinct()
       .withColumn("_rep", col("_id"))
     var current = round0.localCheckpoint()
-    // diagnostic arm of the r12 concurrency root-cause hunt: detect the
-    // observed silent-empty corruption IN FLIGHT and dump the post-AQE
-    // executed plan of the materialization that produced it
-    if (sys.props.contains("graft.paranoid")) {
-      val c0 = current.count()
-      if (c0 == 0 && nE0 > 0) {
-        val e0Recount = e0.count()
-        val edgesRecount = edges.count()
-        System.err.println(
-          s"[graft.paranoid] ${Thread.currentThread().getName}: CC round-0 EMPTY " +
-            s"(nE0=$nE0, c0=0; recounts: e0=$e0Recount edges=$edgesRecount)\n" +
-            s"--- executed plan of the empty checkpoint materialization ---\n" +
-            round0.queryExecution.executedPlan.toString)
-      } else if (nE0 == 0) {
-        System.err.println(
-          s"[graft.paranoid] ${Thread.currentThread().getName}: CC e0 EMPTY at count " +
-            s"(recount=${e0.count()})")
-      }
-    }
     // current's checkpoint just materialized `edges` — the raw
     // pre-partition copy is now dead weight for every remaining round
     releaseE0()
@@ -291,16 +272,6 @@ object Dedup {
               col("_rep") === col("_rid"), "left")
             .select(col("_id"), coalesce(col("_rrep"), col("_rep")).as("_rep"), col("_prev"))
           val next = preJump.localCheckpoint()
-          if (sys.props.contains("graft.paranoid")) {
-            val cNext = next.count()
-            if (cNext == 0)
-              System.err.println(
-                s"[graft.paranoid] ${Thread.currentThread().getName}: CC round $round " +
-                  s"COLLAPSED to 0 rows (nE0=$nE0; recounts: propagated=${propagated.count()}, " +
-                  s"edges=${edges.count()})\n" +
-                  s"--- executed plan of the collapsed round ---\n" +
-                  preJump.queryExecution.executedPlan.toString)
-          }
           val changed = next.filter(col("_rep") =!= col("_prev")).count() // scans checkpointed blocks only
           // `next` is an EAGER checkpoint — already materialized — so the
           // replaced round is consumer-free; free its RDD blocks for real
@@ -716,7 +687,7 @@ object Dedup {
     // every position (UTF8String.substring is code-point addressed), an
     // O(L²)-per-document cost that dominated the gram stage; the
     // expression emits bit-identical xxhash64 values (spec-pinned).
-    // CACHED since r16 (guide §1.2/§2.4; ProbeR16 attribution): the frame
+    // CACHED since r16 (guide §1.2/§2.4; OPTIMIZATION_r16.md §3): the frame
     // feeds the repeat-count aggregation AND the candidate semi-join
     // probe side — uncached, the gram pass over the corpus ran twice.
     // 20 B/row, MEMORY_ONLY (evict ⇒ recompute, the shingled contract).

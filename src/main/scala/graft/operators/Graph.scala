@@ -21,16 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Test/probe-only seam: restore the pre-r16 round spelling (per-round
-    * V-row state JOIN instead of the union-into-aggregation form) in
-    * [[pageRank]], so specs can pin that the r16 round shape changes the
-    * plan only, never the rows, and the A/B probe can interleave both
-    * spellings in one JVM. */
-  private[graft] def withLegacyRound[A](body: => A): A = {
-    sys.props("graft.graph.legacyround") = "1"
-    try body finally sys.props.remove("graft.graph.legacyround")
-  }
-
   /** Partition count for an iterative join loop: sized to the EDGE
     * volume once at plan time (target ~2M edge rows ≈ 50 MB per task),
     * capped at the session's shuffle parallelism, floored at 1 — then
@@ -122,34 +112,22 @@ object Graph {
     // zero-contribution row per node (the connectedComponents round
     // shape) — S(v) is the same order-free long sum (Σ contribs + 0),
     // missing-node coalesce(_S, 0) ≡ the zero row, so the result is
-    // bit-identical (GraphSpec pins both spellings row-equal). What it
-    // removes per round: the V-row `sums` frame no longer materializes
-    // as a broadcast build (a blocking sub-job per round on the fast
-    // path) or an exchange+sort SMJ leg (fallback) — the aggregation's
-    // output IS the next rank state after one projection. The
-    // `graft.graph.legacyround` property restores the join spelling
-    // (probe/spec seam).
-    val legacyRound = sys.props.contains("graft.graph.legacyround")
+    // bit-identical (GraphSpec pins the rows the join spelling gave).
+    // What it removes per round: the V-row `sums` frame no longer
+    // materializes as a broadcast build (a blocking sub-job per round on
+    // the fast path) or an exchange+sort SMJ leg (fallback) — the
+    // aggregation's output IS the next rank state after one projection
+    // (−16.5% loop-isolated, OPTIMIZATION_r16.md §9).
     var r = nodes.withColumn("_r", lit(1000000L)).localCheckpoint()
     for (_ <- 1 to iterations) {
-      val next = (if (legacyRound) {
-        val sums = withDeg
-          .join(hint(r.withColumnRenamed("_id", "_s")), "_s")
-          .select(col("_d"), expr("_r div _deg").as("_c"))
-          .groupBy("_d").agg(sum(col("_c")).as("_S"))
-        nodes
-          .join(hint(sums.withColumnRenamed("_d", "_id")), Seq("_id"), "left")
-          .select(col("_id"),
-            (lit(base) + expr(s"($dampingPct * coalesce(_S, 0L)) div 100")).as("_r"))
-      } else {
-        withDeg
-          .join(hint(r.withColumnRenamed("_id", "_s")), "_s")
-          .select(col("_d").as("_id"), expr("_r div _deg").as("_c"))
-          .unionByName(nodes.select(col("_id"), lit(0L).as("_c")))
-          .groupBy("_id").agg(sum(col("_c")).as("_S"))
-          .select(col("_id"),
-            (lit(base) + expr(s"($dampingPct * _S) div 100")).as("_r"))
-      }).localCheckpoint()
+      val next = withDeg
+        .join(hint(r.withColumnRenamed("_id", "_s")), "_s")
+        .select(col("_d").as("_id"), expr("_r div _deg").as("_c"))
+        .unionByName(nodes.select(col("_id"), lit(0L).as("_c")))
+        .groupBy("_id").agg(sum(col("_c")).as("_S"))
+        .select(col("_id"),
+          (lit(base) + expr(s"($dampingPct * _S) div 100")).as("_r"))
+        .localCheckpoint()
       graft.CacheScope.releaseLocalCheckpoint(r)
       r = next
     }
@@ -226,14 +204,14 @@ object Graph {
       // side (inner join + null-label filter) while this left-outer prev
       // leg cannot — the two broadcast build subtrees are semantically
       // different, so no alias spelling makes them canonical-equal
-      // (ProbeLpReuse: ReusedExchange never appears; 7-rep interleaved
-      // medians 2.589 vs 2.618 s — a wash). And NOT the pageRank r16
-      // union-into-aggregation case either (measured, ProbeRoundShape
-      // n=9 loop-isolated): folding (vote counts ∪ prev rows) into one
-      // max_by aggregation reads +4.8% median, slower in 7/9 reps —
-      // unlike pageRank's, the broadcast builds removed are cheap
-      // V-row frames while the union pushes V extra rows through the
-      // struct-ordered arg-max; the join spelling stays.
+      // (ReusedExchange never appears; 7-rep interleaved medians 2.589
+      // vs 2.618 s — a wash, OPTIMIZATION_r16.md §8). And NOT the
+      // pageRank r16 union-into-aggregation case either (measured, n=9
+      // loop-isolated, OPTIMIZATION_r16.md §9): folding (vote counts ∪
+      // prev rows) into one max_by aggregation reads +4.8% median,
+      // slower in 7/9 reps — unlike pageRank's, the broadcast builds
+      // removed are cheap V-row frames while the union pushes V extra
+      // rows through the struct-ordered arg-max; the join spelling stays.
       val next = nodes.select(col("_id"), col("_seed"))
         .join(hint(votes.select(col("_s").as("_id"), col("_vote"))), Seq("_id"), "left")
         .join(hint(labels.select(col("_id"), col("_lbl").as("_prev"))), Seq("_id"), "left")

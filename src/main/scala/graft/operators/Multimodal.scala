@@ -61,10 +61,8 @@ object Multimodal {
   //     sniff across providers) and constructs a fresh reader/writer.
   // Both are removed: explicit per-THREAD reader/writer instances (an
   // ImageReader is stateful and not thread-safe; executor pool threads are
-  // long-lived, so this is ≤ nCores instances) over Memory-cache streams.
-  // `graft.multimodal.legacyCodec` restores the convenience API for A/B
-  // bisects (BASELINE.md q61 section).
-  private def legacyCodec = sys.props.contains("graft.multimodal.legacyCodec")
+  // long-lived, so this is ≤ nCores instances) over Memory-cache streams
+  // (BASELINE.md q61 section).
 
   private val pngReaderTL = new ThreadLocal[javax.imageio.ImageReader] {
     override def initialValue(): javax.imageio.ImageReader =
@@ -77,18 +75,15 @@ object Multimodal {
 
   private def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    if (legacyCodec) javax.imageio.ImageIO.write(img, "png", bos)
-    else {
-      val writer = pngWriterTL.get()
-      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-      try {
-        writer.setOutput(ios)
-        writer.write(img)
-        ios.flush()
-      } finally {
-        writer.setOutput(null)
-        ios.close()
-      }
+    val writer = pngWriterTL.get()
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try {
+      writer.setOutput(ios)
+      writer.write(img)
+      ios.flush()
+    } finally {
+      writer.setOutput(null)
+      ios.close()
     }
     bos.toByteArray
   }
@@ -144,23 +139,16 @@ object Multimodal {
   }
 
   private def decodeGray(payload: Array[Byte]): java.awt.image.BufferedImage = {
-    val img =
-      if (legacyCodec)
-        javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      else {
-        val reader = pngReaderTL.get()
-        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(payload))
-        try {
-          reader.setInput(iis, true, true)
-          reader.read(0)
-        } finally {
-          reader.setInput(null)
-          iis.close()
-        }
-      }
-    require(img != null, "payload is not a decodable image")
-    img
+    val reader = pngReaderTL.get()
+    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    try {
+      reader.setInput(iis, true, true)
+      reader.read(0)
+    } finally {
+      reader.setInput(null)
+      iis.close()
+    }
   }
 
   /** Integer pixel sum divided once in double — a single IEEE-754 division

@@ -19,24 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Rank {
 
-  /** Test-only seam: force [[bradleyTerry]]'s decimal(38,0) ride
-    * regardless of the maxComps bound, so specs can pin long-vs-decimal
-    * dispatch equivalence without building a >9·10⁶-comparison frame. */
-  private[graft] def withForcedDecimalRide[A](body: => A): A = {
-    sys.props("graft.rank.forcedecimal") = "1"
-    try body finally sys.props.remove("graft.rank.forcedecimal")
-  }
-
-  /** Test/probe-only seam: restore the r15 γ-leg spelling (bare `_item`
-    * attribute on the `_gi` leg), whose broadcast build side never
-    * canonical-matches the `_gj` leg — so specs can pin that the r16
-    * symmetric-alias spelling changes the plan only, never the rows. */
-  private[graft] def withAsymGammaLeg[A](body: => A): A = {
-    sys.props("graft.rank.asymleg") = "1"
-    try body finally sys.props.remove("graft.rank.asymleg")
-  }
-
-
   /** Bradley-Terry strength ratings from pairwise outcomes via fixed
     * synchronous rounds of Hunter's MM algorithm (Hunter 2004, "MM
     * algorithms for generalized Bradley-Terry models").
@@ -80,7 +62,15 @@ object Rank {
     * ratings without re-exploding to row grain); exactly equivalent to
     * the exploded log (spec-tested law). */
   def bradleyTerry(comps: DataFrame, winnerCol: String, loserCol: String,
-      rounds: Int, weightCol: String = null): DataFrame = {
+      rounds: Int, weightCol: String = null): DataFrame =
+    bradleyTerry(comps, winnerCol, loserCol, rounds, weightCol, forceDecimal = false)
+
+  /** [[bradleyTerry]] with the round dispatch exposed: `forceDecimal`
+    * takes the decimal(38,0) ride regardless of the maxComps bound, so
+    * specs can pin long-vs-decimal dispatch equivalence without building
+    * a >9·10⁶-comparison frame. */
+  private[graft] def bradleyTerry(comps: DataFrame, winnerCol: String, loserCol: String,
+      rounds: Int, weightCol: String, forceDecimal: Boolean): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
     val idType = comps.schema(winnerCol).dataType
     val dec = (c: Column) => c.cast("decimal(38,0)")
@@ -172,8 +162,7 @@ object Rank {
     // carries ≳2·10⁶ duels) must not divide by zero; the huge resulting
     // term keeps both ratings at the 0 fixed point, and every
     // non-degenerate case is untouched (γ_i + γ_j ≥ 1 already)
-    val fastLong = maxComps <= 9000000L &&
-      !sys.props.contains("graft.rank.forcedecimal")
+    val fastLong = maxComps <= 9000000L && !forceDecimal
     val tTerm =
       if (fastLong) expr("_n * 1000000000000 div greatest(_gi + _gj, 1)")
       else fdiv(dec(col("_n")) * scale,
@@ -200,17 +189,12 @@ object Rank {
     // sides canonicalize EQUAL (canonical plans erase alias names, but a
     // bare attribute on one leg is not an alias and blocks the match) —
     // AQE's stage cache then builds ONE γ broadcast per round and the _gj
-    // join reads a ReusedExchange (probe: the reuse appears only with the
-    // symmetric spelling; pure rename, rows identical). The
-    // `graft.rank.asymleg` property restores the r15 spelling — the
-    // ProbeBtReuse A/B seam and the RankSpec equivalence pin.
-    val asymLeg = sys.props.contains("graft.rank.asymleg")
+    // join reads a ReusedExchange (the reuse appears only with the
+    // symmetric spelling; pure rename, rows identical — −2.2%/−2.5% on
+    // q184's train, OPTIMIZATION_r16.md §8).
     for (_ <- 1 to rounds) {
-      val giLeg =
-        if (asymLeg) gPlan.select(col("_item"), col("_g").as("_gi"))
-        else gPlan.select(col("_item").as("_item"), col("_g").as("_gi"))
-      // NOT the pageRank r16 union/fold case (measured, ProbeRoundShape
-      // session 4, q184's duels, whole-train interleaved n=7): riding
+      // NOT the pageRank r16 union/fold case (measured, q184's duels,
+      // whole-train interleaved n=7, OPTIMIZATION_r16.md §9): riding
       // `_wins` on the dir frame so γ' projects straight off the
       // denominator aggregation (no items join) read +7.6% median,
       // slower in 6/7 reps — the extra 8 bytes/row flow through BOTH
@@ -218,7 +202,7 @@ object Rank {
       // hot path, while the items join this removes is a cheap V-row
       // AQE-broadcast. The per-round items join stays.
       val denom = dir
-        .join(hint(giLeg), Seq("_item"))
+        .join(hint(gPlan.select(col("_item").as("_item"), col("_g").as("_gi"))), Seq("_item"))
         .join(hint(gPlan.select(col("_item").as("_opp"), col("_g").as("_gj"))), Seq("_opp"))
         .select(col("_item"), tTerm.as("_t"))
         .groupBy("_item").agg(dSum.as("_D"))

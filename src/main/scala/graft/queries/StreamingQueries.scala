@@ -64,12 +64,13 @@ object StreamingQueries {
     * concurrent-soak isolation model is untouched (a thread never shares
     * its child with a sibling; threads on different parents never meet) —
     * because each fresh SessionState costs ~0.15 s of analyzer/catalog/
-    * extension re-initialization on its first query (measured, ProbeR16
-    * arms b/c/d: fresh-child minimal drain 0.42-0.45 s vs 0.37-0.38
-    * reused). Per-gate STATE isolation is untouched: every drain still
-    * starts its own query (fresh name, fresh temp checkpoint + state
-    * dirs); only the session object and its conf are shared. The map is
-    * weak-keyed so a test's discarded parent session can be collected.
+    * extension re-initialization on its first query (measured,
+    * OPTIMIZATION_r16.md §1: fresh-child minimal drain 0.42-0.45 s vs
+    * 0.37-0.38 reused). Per-gate STATE isolation is untouched: every
+    * drain still starts its own query (fresh name, fresh temp checkpoint
+    * + state dirs); only the session object and its conf are shared.
+    * The map is weak-keyed so a test's discarded parent session can be
+    * collected.
     *
     * `noDataMicroBatches=false` (r16, guide §1.2 remove work outright):
     * after the single AvailableNow data batch, Spark runs one extra
@@ -89,14 +90,6 @@ object StreamingQueries {
     override def initialValue() = new java.util.WeakHashMap[SparkSession, SparkSession]()
   }
   private def streamSession(parent: SparkSession): SparkSession = {
-    // DIAGNOSTIC-ONLY seam (the r15 GraphHintProbe discipline): the r15
-    // per-gate behavior — fresh child session, no-data micro-batches on —
-    // for interleaved same-JVM A/B probes. Never set outside probes.
-    if (sys.props.contains("graft.stream.legacySession")) {
-      val ns = parent.newSession()
-      ns.conf.set("spark.sql.shuffle.partitions", "8")
-      return ns
-    }
     val m = pooledChildren.get()
     var ns = m.get(parent)
     if (ns == null) {

@@ -7,9 +7,9 @@ import org.apache.spark.sql.DataFrame
   * canonically equal, so Spark's CacheManager can never share a cache
   * entry between concurrent workers — which removes the precondition for
   * the whole silent-empty chain (foreign unpersist → dependent re-compile
-  * → stats-poisoned builder → AQE EmptyRelation; see BASELINE.md r12 and
-  * `tools/ForcedStatsRace`). Same-thread plans stay canonically equal, so
-  * serial cache reuse is unchanged.
+  * → stats-poisoned builder → AQE EmptyRelation; see BASELINE.md "r12
+  * ROOT CAUSE"). Same-thread plans stay canonically equal, so serial
+  * cache reuse is unchanged.
   */
 class CacheIsolationSpec extends SparkSpec {
 

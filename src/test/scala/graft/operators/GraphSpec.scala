@@ -112,20 +112,26 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pageRank r16 union-agg round equals the legacy join round row-for-row") {
-    // the RankSpec spelling-equality discipline: the round SHAPE (V-row
-    // state join vs union-into-aggregation) must never change rows.
-    // Graph: 1..300 with two out-edges each, plus a dangling sink 9999
-    // (in-edges only, zero contributions every round) so the zero-union
-    // row stands in for the legacy left-join miss.
+    // the round SHAPE (V-row state join vs union-into-aggregation) must
+    // never change rows. The legacy join round is gone; these values were
+    // taken from the r16 operator while both spellings were still proven
+    // equal on this graph. Graph: 1..300 with two out-edges each, plus a
+    // dangling sink 9999 (in-edges only, zero contributions every round)
+    // so the zero-union row stands in for the legacy left-join miss.
     val edges = ((1 to 300).flatMap(i =>
       Seq((i.toLong, ((i * 7) % 300 + 1).toLong), (i.toLong, ((i * 13) % 300 + 1).toLong))) ++
       Seq((17L, 9999L))).toDF("s", "d")
-    def prRows(): Map[Long, Long] = {
-      val m = Graph.pageRank(edges, "s", "d", 5)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      graft.CacheScope.release(); m
-    }
-    assert(Graph.withLegacyRound(prRows()) == prRows())
+    val rows = Graph.pageRank(edges, "s", "d", 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    graft.CacheScope.release()
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.toSeq.sorted.map { case (n, r) => s"$n,$r" }.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    assert(rows.size == 301)
+    assert(rows.values.sum == 299382496L)
+    assert(md5 == "86ecdd9fe07e3a2e80c20fd96a94b7d8", s"sorted (node, rank) digest: $md5")
+    assert(rows(17L) == 1000000L)
+    assert(rows(9999L) == 433333L)
   }
 
   test("iteration round plan: cached edge frame joins with zero Exchange and zero Sort on its side") {

@@ -79,17 +79,16 @@ class RankSpec extends SparkSpec {
     // r15 round dispatch: when maxComps <= 9e6 the whole round (term,
     // denominator sum, gamma' division) runs codegen'd long arithmetic.
     // Same frame through both branches must produce identical ratings —
-    // the decimal ride is driven by the test-only seam rather than a
-    // >9e6-comparison input.
+    // the decimal ride is driven by the `forceDecimal` parameter rather
+    // than a >9e6-comparison input.
     val comps = Seq((1L, 2L, 3L), (2L, 1L, 1L), (2L, 3L, 4L), (1L, 3L, 2L),
       (3L, 4L, 5L), (4L, 2L, 2L)).toDF("w", "l", "n")
     val fast = Rank.bradleyTerry(comps, "w", "l", rounds = 5, weightCol = "n")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
     graft.CacheScope.release()
-    val slow = Rank.withForcedDecimalRide {
-      Rank.bradleyTerry(comps, "w", "l", rounds = 5, weightCol = "n")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
-    }
+    val slow = Rank.bradleyTerry(comps, "w", "l", rounds = 5, weightCol = "n",
+        forceDecimal = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
     graft.CacheScope.release()
     assert(fast.sameElements(slow),
       s"dispatch branches diverged: ${fast.toSeq} vs ${slow.toSeq}")
@@ -98,20 +97,18 @@ class RankSpec extends SparkSpec {
   test("bradleyTerry: symmetric gamma legs equal the r15 asymmetric spelling") {
     // r16: both γ-leg columns are aliased so the two broadcast build
     // sides canonicalize equal and AQE builds ONE γ broadcast per round
-    // (the _gj join reads a ReusedExchange — ProbeBtReuse). A pure
-    // rename: the rows must be identical under either spelling.
+    // (the _gj join reads a ReusedExchange — OPTIMIZATION_r16.md §8). A pure
+    // rename: the rows must be identical under either spelling. The
+    // asymmetric spelling is gone; these tuples were taken from the r16
+    // operator while both spellings were still proven equal.
     val comps = Seq((1L, 2L, 3L), (2L, 1L, 1L), (2L, 3L, 4L), (1L, 3L, 2L),
       (3L, 4L, 5L), (4L, 2L, 2L)).toDF("w", "l", "n")
     val sym = Rank.bradleyTerry(comps, "w", "l", rounds = 5, weightCol = "n")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
     graft.CacheScope.release()
-    val asym = Rank.withAsymGammaLeg {
-      Rank.bradleyTerry(comps, "w", "l", rounds = 5, weightCol = "n")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
-    }
-    graft.CacheScope.release()
-    assert(sym.sameElements(asym),
-      s"leg spellings diverged: ${sym.toSeq} vs ${asym.toSeq}")
+    assert(sym.toSeq == Seq((1L, 2472016L, 5L, 6L), (2L, 801988L, 5L, 10L),
+      (3L, 487573L, 5L, 11L), (4L, 238421L, 2L, 7L)),
+      s"gamma legs diverged from the pinned ratings: ${sym.toSeq}")
   }
 
   test("bradleyTerry round plan: broadcast gamma joins leave the pair frame unshuffled") {
