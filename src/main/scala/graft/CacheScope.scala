@@ -14,16 +14,18 @@ import org.apache.spark.sql.Dataset
   * invocations (bench repeats, scale-probe loops) pile up cached tables
   * that evict each other back to recompute.
   *
-  * Contract: operators `track` every internal persist; harness callers
-  * (Verify, Bench, ScaleProbe, tests) call `release()` after materializing
-  * a query's output. Release order is irrelevant (unpersist is idempotent
-  * and cheap), and releasing early is SAFE — a dropped cache degrades to
+  * Contract: operators [[track]] every persist their RETURNED plan
+  * reads and [[trackCheckpoint]] every checkpoint it reads; harness
+  * callers (Verify, Bench, ScaleProbe, tests) call `release()` after
+  * materializing a query's output. A persist only the operator's own
+  * eager work reads is held for one [[retained]] block instead. Release
+  * order is irrelevant (unpersist is idempotent and cheap), and
+  * releasing a persist early is SAFE — a dropped cache degrades to
   * recompute, never to wrong answers (every tracked table is a
   * deterministic projection; the one case where recompute could change
   * results — `Relational.distributedPrefixSum`'s sampled range
   * partitioning, shared by sequentialPack / concurrencySweep /
-  * paretoClasses — is self-contained: persist → eager materialize →
-  * unpersist inside the helper and never tracked here).
+  * paretoClasses — is self-contained in one [[retained]] block).
   *
   * CONCURRENCY: the registries are THREAD-scoped and the unpersists are
   * REFERENCE-COUNTED. A multi-tenant service runs many sessions' queries
@@ -250,10 +252,7 @@ object CacheScope {
     }
   }
 
-  /** Take a reference on a persisted plan WITHOUT enqueueing it for the
-    * end-of-query release — for operator-internal frames released early
-    * and explicitly via [[releaseOne]] (iterative loops' edge lists). */
-  def retain[T](ds: Dataset[T]): Dataset[T] = {
+  private def retain[T](ds: Dataset[T]): Dataset[T] = {
     refCounts.merge(keyOf(ds), 1, (a, b) => a + b); ds
   }
 
@@ -267,7 +266,7 @@ object CacheScope {
     * `recacheByCondition` dependent re-compilation, not just the async
     * block-removal mark — which is exactly why the lock is per-key, not
     * global (ADVICE r12). */
-  def releaseOne(ds: Dataset[_]): Unit =
+  private def releaseOne(ds: Dataset[_]): Unit =
     threadScope.get() match {
       case Some(id) =>
         // shared scope: NEVER unpersist while the scope lives — a sibling
@@ -294,14 +293,19 @@ object CacheScope {
     * (by the SAME thread — see CONCURRENCY above). */
   def track[T](ds: Dataset[T]): Dataset[T] = { retain(ds); tracked.get().add(ds); ds }
 
-  /** Early-release a frame THIS THREAD already `track`ed (iterative
-    * operators free their raw edge cache once the loop-lived frames are
-    * materialized): drops the reference now instead of at end-of-query,
-    * and removes it from the thread's queue so the reference is never
-    * double-counted. */
-  def releaseEarly(ds: Dataset[_]): Unit = {
-    tracked.get().remove(ds)
-    releaseOne(ds)
+  /** `hold(ds)` takes a reference on a persisted `ds` for the block. */
+  final class Lease private[CacheScope] () {
+    private[CacheScope] val held = new java.util.ArrayDeque[Dataset[_]]()
+    def apply[T](ds: Dataset[T]): Dataset[T] = { retain(ds); held.push(ds); ds }
+  }
+
+  /** Run `body` with a [[Lease]]; every persist it holds is released
+    * when `body` exits, normally or by an exception — so nothing `body`
+    * returns may read them unmaterialized. */
+  def retained[R](body: Lease => R): R = {
+    val lease = new Lease
+    try body(lease)
+    finally while (!lease.held.isEmpty) releaseOne(lease.held.pop())
   }
 
   /** Register a `localCheckpoint`'d dataset (an operator OUTPUT whose

@@ -183,73 +183,46 @@ object Dedup {
     * (AQE skew-join splits it). If the cap is somehow hit before
     * fixpoint the labels are WRONG (nodes farther than the compressed
     * reach keep a stale rep), so this throws rather than silently
-    * returning them.
+    * returning them. The round loop is [[Iterate.fixpoint]].
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 64): DataFrame = {
-    // symmetrize via explode, NOT a self-union: a union evaluates the
-    // whole upstream pair plan twice (for q45/q46/q55 that plan is the
-    // full candidate+verify join), explode doubles rows in one pass
-    val e0 = graft.CacheScope.retain(pairs
-      .select(explode(array(
-        struct(col(aCol).as("_x"), col(bCol).as("_y")),
-        struct(col(bCol).as("_x"), col(aCol).as("_y")))).as("_e"))
-      .select(col("_e._x").as("_x"), col("_e._y").as("_y"))
-      .distinct()
-      .cache())
-    // e0's reference is dropped as soon as the round-0 checkpoint has
-    // materialized `edges` — but ANY exception before that point (count,
-    // repartition sizing, the checkpoint itself) must release it too, or
-    // the refCounts entry leaks permanently and the cache entry can never
-    // be freed for the JVM's lifetime (ADVICE r11).
-    var e0Released = false
-    def releaseE0(): Unit = if (!e0Released) { e0Released = true; graft.CacheScope.releaseOne(e0) }
-    try {
-    // the Graph-family co-partitioned-iteration discipline: pin the
-    // symmetric edge list on the per-round join key (_y) with an
-    // edge-volume-derived partition count, SORTED, so each round's
-    // propagate join re-shuffles and re-sorts only the V-row label side
-    val nE0 = e0.count()
-    val edges = graft.CacheScope.retain(e0
-      .repartition(Graph.iterPartitions(e0, nE0), col("_y"))
-      .sortWithinPartitions("_y")
-      .cache())
-    try {
-    // Each round references the previous labels twice (carry + propagate),
-    // so without lineage truncation the logical plan doubles per round —
-    // 2^rounds analysis blow-up on high-diameter graphs (found by probing
-    // a 39-node path). localCheckpoint materializes the round and resets
-    // the plan; on a cluster use reliable checkpointing instead.
-    val round0 = edges.select(col("_x").as("_id")).distinct()
-      .withColumn("_rep", col("_id"))
-    var current = round0.localCheckpoint()
-    // current's checkpoint just materialized `edges` — the raw
-    // pre-partition copy is now dead weight for every remaining round
-    releaseE0()
-    val repType = current.schema("_rep").dataType
-    // r15 (the bradleyTerry/pageRank hint): the label frame is V-sized —
-    // broadcast it into the propagate join and the pointer-jump lookup
-    // while model-sized (≤ 2M rows), so a round re-shuffles neither the
-    // cached |E| side nor the V-side; past the bound AQE keeps the
-    // shuffle plan. V is the round-0 checkpoint's count (cheap —
-    // materialized blocks) and constant across rounds. Interleaved
-    // same-JVM probe on the pageRank twin of this loop: −9% whole-loop,
-    // checksums identical (BASELINE.md r15). Byte-aware since r16
-    // (VERDICT r15 item 3): `_rep` is CALLER-typed — 2M wide-string doc
-    // ids would be hundreds of MB per round's broadcast, so the test
-    // measures string bytes over the already-checkpointed round-0 frame
-    // (one cheap agg; skipped entirely for integral ids).
-    val nV = current.count()
-    val hint: DataFrame => DataFrame =
-      if (ModelSized.fits(current.select("_id", "_rep"), nV)) broadcast(_)
-      else identity
-    var converged = false
-    var round = 0
-    // try/finally so a failure path (round-cap throw, or any exception
-    // mid-round) releases every cached/checkpointed block instead of
-    // leaking it for the session's lifetime
-    try {
-      while (!converged && round < maxRounds) {
+    graft.CacheScope.retained { hold =>
+      val (edges, round0) = graft.CacheScope.retained { raw =>
+        // symmetrize via explode, NOT a self-union: a union evaluates the
+        // whole upstream pair plan twice (for q45/q46/q55 that plan is the
+        // full candidate+verify join), explode doubles rows in one pass
+        val e0 = raw(pairs
+          .select(explode(array(
+            struct(col(aCol).as("_x"), col(bCol).as("_y")),
+            struct(col(bCol).as("_x"), col(aCol).as("_y")))).as("_e"))
+          .select(col("_e._x").as("_x"), col("_e._y").as("_y"))
+          .distinct()
+          .cache())
+        // the Graph-family loop frame: the symmetric edge list pinned on
+        // the per-round join key (_y), so each round's propagate join
+        // re-shuffles and re-sorts only the V-row label side
+        val edges = hold(Iterate.pin(e0, Iterate.partitions(e0, Graph.RowsPerTask), "_y"))
+        // Each round references the previous labels twice (carry +
+        // propagate), so without lineage truncation the logical plan
+        // doubles per round — 2^rounds analysis blow-up on high-diameter
+        // graphs (found by probing a 39-node path). Round 0's checkpoint
+        // also materializes `edges`: after it the raw copy is dead weight.
+        (edges, Iterate.checkpoint(edges.select(col("_x").as("_id")).distinct()
+          .withColumn("_rep", col("_id"))))
+      }
+      val repType = round0.df.schema("_rep").dataType
+      // r15 (the bradleyTerry/pageRank hint): the label frame is V-sized —
+      // broadcast it into the propagate join and the pointer-jump lookup
+      // while model-sized, so a round re-shuffles neither the cached |E|
+      // side nor the V-side. V is the round-0 checkpoint's count (cheap —
+      // materialized blocks) and constant across rounds. Byte-aware since
+      // r16 (VERDICT r15 item 3): `_rep` is CALLER-typed — 2M wide-string
+      // doc ids would be hundreds of MB per round's broadcast, so the test
+      // measures string bytes over the already-checkpointed round-0 frame
+      // (one cheap agg; skipped entirely for integral ids).
+      val hint = ModelSized.hint(round0.df.select("_id", "_rep"), round0.df.count())
+      Iterate.fixpoint(round0, maxRounds, "connectedComponents") { current =>
         val labels = current.select("_id", "_rep")
         val viaNeighbors = edges
           .join(hint(labels.withColumnRenamed("_id", "_y2")), col("_y") === col("_y2"))
@@ -257,47 +230,25 @@ object Dedup {
         // cache: the jump self-join below consumes `propagated` twice —
         // uncached, the whole edges-join + aggregation would execute twice
         // per round (exchange reuse is not guaranteed under AQE)
-        val propagated = graft.CacheScope.retain(
-          labels.select(col("_id"), col("_rep"), col("_rep").as("_prev"))
-          .unionByName(viaNeighbors)
-          .groupBy("_id")
-          .agg(min(col("_rep")).as("_rep"), max(col("_prev")).as("_prev"))
-          .cache())
-        try {
+        graft.CacheScope.retained { roundHold =>
+          val propagated = roundHold(
+            labels.select(col("_id"), col("_rep"), col("_rep").as("_prev"))
+              .unionByName(viaNeighbors)
+              .groupBy("_id")
+              .agg(min(col("_rep")).as("_rep"), max(col("_prev")).as("_prev"))
+              .cache())
           // pointer jump: _rep := _rep(_rep). Every rep value is itself a node
           // (labels start as self-ids and only node ids propagate), so the
           // lookup side is unique-keyed; left join guards the identity case.
-          val preJump = propagated
+          Iterate.checkpoint(propagated
             .join(hint(propagated.select(col("_id").as("_rid"), col("_rep").as("_rrep"))),
               col("_rep") === col("_rid"), "left")
-            .select(col("_id"), coalesce(col("_rrep"), col("_rep")).as("_rep"), col("_prev"))
-          val next = preJump.localCheckpoint()
-          val changed = next.filter(col("_rep") =!= col("_prev")).count() // scans checkpointed blocks only
-          // `next` is an EAGER checkpoint — already materialized — so the
-          // replaced round is consumer-free; free its RDD blocks for real
-          // (`Dataset.unpersist` never sees a checkpoint's RDD-level persist)
-          graft.CacheScope.releaseLocalCheckpoint(current)
-          current = next
-          converged = changed == 0
-          round += 1
-        } finally graft.CacheScope.releaseOne(propagated)
+            .select(col("_id"), coalesce(col("_rrep"), col("_rep")).as("_rep"), col("_prev")))
+        }
+      } { next =>
+        next.filter(col("_rep") =!= col("_prev")).count() // scans checkpointed blocks only
       }
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds " +
-          "(graph diameter exceeds the cap); raise maxRounds")
-    } catch {
-      case t: Throwable =>
-        graft.CacheScope.releaseLocalCheckpoint(current); throw t
-    }
-    // the result rides the final round's checkpoint blocks — the caller
-    // must consume them before the next CacheScope.release()
-    graft.CacheScope.trackCheckpoint(
-      current.select(col("_id").as("id"), col("_rep").as("rep")))
-    // edges is released exactly once whether the loop finished or threw
-    // (outer finally); e0 likewise via releaseE0's idempotence guard —
-    // a refcounted double-release would steal another holder's reference.
-    } finally graft.CacheScope.releaseOne(edges)
-    } finally releaseE0()
+    }.select(col("_id").as("id"), col("_rep").as("rep"))
   }
 
   /** Near-dup-aware train/valid/test split: assign every document's
@@ -710,8 +661,7 @@ object Dedup {
       hashed.groupBy("_h").agg(count(lit(1)).as("_c"))
         .filter(col("_c") >= 2).select("_h")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
-    val rhHint: DataFrame => DataFrame =
-      if (ModelSized.fits(repeatedHash, repeatedHash.count())) broadcast(_) else identity
+    val rhHint = ModelSized.hint(repeatedHash, repeatedHash.count())
     val candidates = hashed.join(rhHint(repeatedHash), Seq("_h"), "left_semi")
     // verify: re-derive the raw gram for CANDIDATE positions only and
     // rerun the exact repeat test on it (collision kill). Candidate-sized

@@ -517,15 +517,15 @@ object Events {
     // model-sized grain take distributedPrefixSum's single-window fast
     // path; past the bound the two-phase path reads the cache instead
     // of recomputing the delta aggregation into its range persist.
-    // retain/releaseOne, not track: the prefix sum materializes its
+    // retained, not tracked: the prefix sum materializes its
     // checkpoint before returning, so the grain cache is DEAD on return
     // — the operator self-releases it (the CacheLifecycleSpec pin:
     // only the result checkpoint may outlive the call).
-    val g = graft.CacheScope.retain(deltas.cache())
-    try
+    graft.CacheScope.retained { hold =>
+      val g = hold(deltas.cache())
       Relational.distributedPrefixSum(g, Seq(col("_t")), "_d", knownRows = g.count())
         .select(col("_t").as("ts"), col("_cum_incl").cast("long").as("n_active"))
-    finally graft.CacheScope.releaseOne(g)
+    }
   }
 
   /** Regular-grid gap fill over a keyed time series: resample each key's

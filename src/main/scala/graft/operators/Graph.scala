@@ -8,12 +8,10 @@ import org.apache.spark.sql.functions._
   * semi-supervised label spread (label propagation) over the kNN /
   * near-dup graphs the dedup+ANN family already produces.
   *
-  * Both operators follow the engine's iterative contract (the
-  * [[Dedup.connectedComponents]] pattern): a FIXED number of synchronous
-  * rounds, one keyed aggregation per round, `localCheckpoint` per round to
-  * truncate lineage (on a cluster: reliable checkpointing), retired
-  * rounds' blocks freed in-loop. And both are *integer-exact*: ranks ride
-  * as micro-units with integral division and label votes break ties on
+  * Both operators run a FIXED number of synchronous rounds, one keyed
+  * aggregation per round, on [[Iterate]] (the engine's iterative
+  * contract). And both are *integer-exact*: ranks ride as micro-units
+  * with integral division and label votes break ties on
   * (count DESC, label ASC) — a strict total order — so results are
   * bit-identical across engines, partitionings, and runs; no
   * order-dependent float summation ever surfaces (the
@@ -21,21 +19,9 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Partition count for an iterative join loop: sized to the EDGE
-    * volume once at plan time (target ~2M edge rows ≈ 50 MB per task),
-    * capped at the session's shuffle parallelism, floored at 1 — then
-    * PINNED for every round (explicit counts are exempt from AQE
-    * coalescing, so the cached edge frame and every round's checkpoint
-    * keep exactly this partitioning and the per-round join re-shuffles
-    * neither side). A fixed `spark.sql.shuffle.partitions` would do the
-    * opposite at both extremes: a 6k-edge gate graph would pay 32-task
-    * scheduling overhead per tiny stage, and a cluster run would
-    * under-partition. The one count() here is a scan the first round
-    * would pay anyway. */
-  private[operators] def iterPartitions(df: DataFrame, nRows: Long): Int = {
-    val sessionP = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(sessionP, ((nRows + 1999999L) / 2000000L).toInt))
-  }
+  /** Loop-frame density for [[Iterate.partitions]]: ~2M edge rows
+    * ≈ 50 MB per task (also [[Dedup.connectedComponents]]'). */
+  private[operators] val RowsPerTask = 2000000L
 
   /** PageRank with fixed `iterations` and integer micro-unit arithmetic.
     *
@@ -74,67 +60,54 @@ object Graph {
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
     val idType = edges.schema(srcCol).dataType
     val base = (1000000L * (100 - dampingPct)) / 100
-    val e = graft.CacheScope.track(
-      edges.select(col(srcCol).cast("long").as("_s"), col(dstCol).cast("long").as("_d"))
-        .cache())
-    val p = iterPartitions(e, e.count())
-    // degree rides WITH each edge (one join, reused every round);
-    // partitioned AND sorted on the per-round join key, so the round's
-    // sort-merge join neither re-shuffles nor re-sorts the |E|-row side
-    // (the cached ordering satisfies the SMJ requirement — only the
-    // V-row rank side pays a per-round sort)
-    val withDeg = graft.CacheScope.track(
-      e.join(e.groupBy("_s").agg(count(lit(1)).as("_deg")), "_s")
-        .repartition(p, col("_s")).sortWithinPartitions("_s").cache())
-    val nodes = graft.CacheScope.track(
-      e.select(col("_s").as("_id")).union(e.select(col("_d").as("_id")))
-        .distinct().repartition(p, col("_id")).sortWithinPartitions("_id").cache())
-    // materialize the two loop-lived frames from the cached edges, then
-    // free the raw edge cache — it would otherwise sit as |E| dead rows
-    // through every round
-    withDeg.count(); val nNodes = nodes.count()
-    graft.CacheScope.releaseEarly(e)
-    // r15 (the bradleyTerry hint): the V-row rank state is model-sized —
-    // broadcast it into the round's edge join while it fits (≤ 2M rows
-    // ≈ 32 MB; the rank leaf is a localCheckpoint whose stats the
-    // planner does not trust into a broadcast on its own). Past the
-    // bound, identity leaves AQE the shuffle plan; the cached |E| side
-    // is untouched either way (GraphSpec's round-plan pin covers the
-    // SMJ fallback shape). Interleaved same-JVM A/B on q132's edges:
-    // 12-round loop −9.4%, checksums identical (BASELINE.md r15).
-    // Byte-aware since r16 (all-long state: pure schema arithmetic,
-    // same outcome as the bare row test up to the 64 MB cap).
-    val hint: DataFrame => DataFrame =
-      if (ModelSized.fits(nodes.withColumn("_r", lit(0L)), nNodes)) broadcast(_)
-      else identity
-    // r16: the round folds the "nodes that received nothing keep base"
-    // left join INTO the destination-key aggregation by unioning one
-    // zero-contribution row per node (the connectedComponents round
-    // shape) — S(v) is the same order-free long sum (Σ contribs + 0),
-    // missing-node coalesce(_S, 0) ≡ the zero row, so the result is
-    // bit-identical (GraphSpec pins the rows the join spelling gave).
-    // What it removes per round: the V-row `sums` frame no longer
-    // materializes as a broadcast build (a blocking sub-job per round on
-    // the fast path) or an exchange+sort SMJ leg (fallback) — the
-    // aggregation's output IS the next rank state after one projection
-    // (−16.5% loop-isolated, OPTIMIZATION_r16.md §9).
-    var r = nodes.withColumn("_r", lit(1000000L)).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val next = withDeg
-        .join(hint(r.withColumnRenamed("_id", "_s")), "_s")
-        .select(col("_d").as("_id"), expr("_r div _deg").as("_c"))
-        .unionByName(nodes.select(col("_id"), lit(0L).as("_c")))
-        .groupBy("_id").agg(sum(col("_c")).as("_S"))
-        .select(col("_id"),
-          (lit(base) + expr(s"($dampingPct * _S) div 100")).as("_r"))
-        .localCheckpoint()
-      graft.CacheScope.releaseLocalCheckpoint(r)
-      r = next
-    }
-    // the returned plan reads the final round's checkpoint blocks —
-    // register them so the harness's release() frees them post-materialize
-    graft.CacheScope.trackCheckpoint(r)
-    r.select(col("_id").cast(idType).as("node_id"), col("_r").as("rank_micro"))
+    graft.CacheScope.retained { hold =>
+      // the raw edge cache only feeds the two loop frames: it is freed
+      // once they are materialized instead of sitting as |E| dead rows
+      // through every round
+      val (withDeg, nodes, nNodes) = graft.CacheScope.retained { raw =>
+        val e = raw(edges.select(col(srcCol).cast("long").as("_s"),
+          col(dstCol).cast("long").as("_d")).cache())
+        val p = Iterate.partitions(e, RowsPerTask)
+        // degree rides WITH each edge (one join, reused every round);
+        // pinned on the per-round join key, so the round's sort-merge
+        // join neither re-shuffles nor re-sorts the |E|-row side (only
+        // the V-row rank side pays a per-round sort)
+        val withDeg = hold(Iterate.pin(
+          e.join(e.groupBy("_s").agg(count(lit(1)).as("_deg")), "_s"), p, "_s"))
+        val nodes = hold(Iterate.pin(
+          e.select(col("_s").as("_id")).union(e.select(col("_d").as("_id"))).distinct(),
+          p, "_id"))
+        withDeg.count()
+        (withDeg, nodes, nodes.count())
+      }
+      // r15 (the bradleyTerry hint): the V-row rank state broadcasts into
+      // the round's edge join while model-sized; past the bound AQE keeps
+      // the shuffle plan and the cached |E| side is untouched either way
+      // (GraphSpec's round-plan pin covers the SMJ fallback shape).
+      // Interleaved same-JVM A/B on q132's edges: 12-round loop −9.4%,
+      // checksums identical (BASELINE.md r15).
+      val hint = ModelSized.hint(nodes.withColumn("_r", lit(0L)), nNodes)
+      // r16: the round folds the "nodes that received nothing keep base"
+      // left join INTO the destination-key aggregation by unioning one
+      // zero-contribution row per node (the connectedComponents round
+      // shape) — S(v) is the same order-free long sum (Σ contribs + 0),
+      // missing-node coalesce(_S, 0) ≡ the zero row, so the result is
+      // bit-identical (GraphSpec pins the rows the join spelling gave).
+      // What it removes per round: the V-row `sums` frame no longer
+      // materializes as a broadcast build (a blocking sub-job per round on
+      // the fast path) or an exchange+sort SMJ leg (fallback) — the
+      // aggregation's output IS the next rank state after one projection
+      // (−16.5% loop-isolated, OPTIMIZATION_r16.md §9).
+      Iterate.rounds(Iterate.checkpoint(nodes.withColumn("_r", lit(1000000L))), iterations) { r =>
+        Iterate.checkpoint(withDeg
+          .join(hint(r.withColumnRenamed("_id", "_s")), "_s")
+          .select(col("_d").as("_id"), expr("_r div _deg").as("_c"))
+          .unionByName(nodes.select(col("_id"), lit(0L).as("_c")))
+          .groupBy("_id").agg(sum(col("_c")).as("_S"))
+          .select(col("_id"),
+            (lit(base) + expr(s"($dampingPct * _S) div 100")).as("_r")))
+      }
+    }.select(col("_id").cast(idType).as("node_id"), col("_r").as("rank_micro"))
   }
 
   /** Semi-supervised label propagation: spread `seeds`' labels over
@@ -162,67 +135,58 @@ object Graph {
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
     val idType = edges.schema(srcCol).dataType
-    // same co-partitioned-iteration discipline as [[pageRank]]: edges
-    // pinned on the per-round join key (_d), nodes on the state key —
-    // each round's edge×label join then re-shuffles neither side
-    val e0 = graft.CacheScope.track(
-      edges.select(col(srcCol).cast("long").as("_s"), col(dstCol).cast("long").as("_d"))
-        .cache())
-    val p = iterPartitions(e0, e0.count())
-    val e = graft.CacheScope.track(
-      e0.repartition(p, col("_d")).sortWithinPartitions("_d").cache())
-    val seed = graft.CacheScope.track(
-      seeds.select(col(seedIdCol).cast("long").as("_id"),
-        col(seedLabelCol).cast("int").as("_seed")).cache())
-    val nodes = graft.CacheScope.track(
-      e.select(col("_s").as("_id")).union(e.select(col("_d").as("_id")))
-        .distinct()
-        .join(seed, Seq("_id"), "left")
-        .repartition(p, col("_id")).sortWithinPartitions("_id").cache())
-    // the pageRank discipline: materialize the loop-lived frames, free
-    // the raw pre-repartition edge cache before the rounds begin
-    e.count(); val nNodes = nodes.count()
-    graft.CacheScope.releaseEarly(e0)
-    // model-sized broadcast hint for the V-row state frames (see
-    // pageRank) — the label side and the per-round vote table both
-    // broadcast while model-sized (byte-aware since r16; all-int/long
-    // state, schema arithmetic only); the cached |E| side never moves
-    val hint: DataFrame => DataFrame =
-      if (ModelSized.fits(nodes.withColumn("_lbl", col("_seed")), nNodes)) broadcast(_)
-      else identity
-    var labels = nodes.withColumn("_lbl", col("_seed")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val votes = e
-        .join(hint(labels.select(col("_id").as("_d"), col("_lbl").as("_nl"))), "_d")
-        .filter(col("_nl").isNotNull)
-        .groupBy(col("_s"), col("_nl")).agg(count(lit(1)).as("_c"))
-        .groupBy(col("_s"))
-        .agg(max_by(col("_nl"), struct(col("_c"), (-col("_nl")).as("_neg"))).as("_vote"))
-      // seed wins, else this round's plurality vote, else carry previous.
-      // NOT the bradleyTerry γ-leg reuse case (r16, measured): the votes
-      // join's label leg carries `Filter isnotnull(_lbl)` on its build
-      // side (inner join + null-label filter) while this left-outer prev
-      // leg cannot — the two broadcast build subtrees are semantically
-      // different, so no alias spelling makes them canonical-equal
-      // (ReusedExchange never appears; 7-rep interleaved medians 2.589
-      // vs 2.618 s — a wash, OPTIMIZATION_r16.md §8). And NOT the
-      // pageRank r16 union-into-aggregation case either (measured, n=9
-      // loop-isolated, OPTIMIZATION_r16.md §9): folding (vote counts ∪
-      // prev rows) into one max_by aggregation reads +4.8% median,
-      // slower in 7/9 reps — unlike pageRank's, the broadcast builds
-      // removed are cheap V-row frames while the union pushes V extra
-      // rows through the struct-ordered arg-max; the join spelling stays.
-      val next = nodes.select(col("_id"), col("_seed"))
-        .join(hint(votes.select(col("_s").as("_id"), col("_vote"))), Seq("_id"), "left")
-        .join(hint(labels.select(col("_id"), col("_lbl").as("_prev"))), Seq("_id"), "left")
-        .select(col("_id"), col("_seed"),
-          coalesce(col("_seed"), col("_vote"), col("_prev")).as("_lbl"))
-        .localCheckpoint()
-      graft.CacheScope.releaseLocalCheckpoint(labels)
-      labels = next
-    }
-    graft.CacheScope.trackCheckpoint(labels)
-    labels.select(col("_id").cast(idType).as("node_id"),
+    graft.CacheScope.retained { hold =>
+      // same loop-frame discipline as [[pageRank]]: edges pinned on the
+      // per-round join key (_d), nodes on the state key — each round's
+      // edge×label join then re-shuffles neither side; the raw edge and
+      // seed caches are freed before the rounds begin
+      val (e, nodes, nNodes) = graft.CacheScope.retained { raw =>
+        val e0 = raw(edges.select(col(srcCol).cast("long").as("_s"),
+          col(dstCol).cast("long").as("_d")).cache())
+        val p = Iterate.partitions(e0, RowsPerTask)
+        val e = hold(Iterate.pin(e0, p, "_d"))
+        val seed = raw(seeds.select(col(seedIdCol).cast("long").as("_id"),
+          col(seedLabelCol).cast("int").as("_seed")).cache())
+        val nodes = hold(Iterate.pin(
+          e.select(col("_s").as("_id")).union(e.select(col("_d").as("_id")))
+            .distinct()
+            .join(seed, Seq("_id"), "left"),
+          p, "_id"))
+        e.count()
+        (e, nodes, nodes.count())
+      }
+      // the label side and the per-round vote table both broadcast while
+      // model-sized (see pageRank); the cached |E| side never moves
+      val hint = ModelSized.hint(nodes.withColumn("_lbl", col("_seed")), nNodes)
+      Iterate.rounds(Iterate.checkpoint(nodes.withColumn("_lbl", col("_seed"))), rounds) {
+        labels =>
+          val votes = e
+            .join(hint(labels.select(col("_id").as("_d"), col("_lbl").as("_nl"))), "_d")
+            .filter(col("_nl").isNotNull)
+            .groupBy(col("_s"), col("_nl")).agg(count(lit(1)).as("_c"))
+            .groupBy(col("_s"))
+            .agg(max_by(col("_nl"), struct(col("_c"), (-col("_nl")).as("_neg"))).as("_vote"))
+          // seed wins, else this round's plurality vote, else carry previous.
+          // NOT the bradleyTerry γ-leg reuse case (r16, measured): the votes
+          // join's label leg carries `Filter isnotnull(_lbl)` on its build
+          // side (inner join + null-label filter) while this left-outer prev
+          // leg cannot — the two broadcast build subtrees are semantically
+          // different, so no alias spelling makes them canonical-equal
+          // (ReusedExchange never appears; 7-rep interleaved medians 2.589
+          // vs 2.618 s — a wash, OPTIMIZATION_r16.md §8). And NOT the
+          // pageRank r16 union-into-aggregation case either (measured, n=9
+          // loop-isolated, OPTIMIZATION_r16.md §9): folding (vote counts ∪
+          // prev rows) into one max_by aggregation reads +4.8% median,
+          // slower in 7/9 reps — unlike pageRank's, the broadcast builds
+          // removed are cheap V-row frames while the union pushes V extra
+          // rows through the struct-ordered arg-max; the join spelling stays.
+          Iterate.checkpoint(nodes.select(col("_id"), col("_seed"))
+            .join(hint(votes.select(col("_s").as("_id"), col("_vote"))), Seq("_id"), "left")
+            .join(hint(labels.select(col("_id"), col("_lbl").as("_prev"))), Seq("_id"), "left")
+            .select(col("_id"), col("_seed"),
+              coalesce(col("_seed"), col("_vote"), col("_prev")).as("_lbl")))
+      }
+    }.select(col("_id").cast(idType).as("node_id"),
       col("_lbl").as("label"),
       col("_seed").isNotNull.cast("int").as("is_seed"))
   }

@@ -46,19 +46,18 @@ object Metrics {
     // cached (r15): the grain collapse ran once either way (the two-phase
     // prefix sum pinned its range-partitioned copy); caching it instead
     // makes the count cheap and lets a model-sized grain take
-    // distributedPrefixSum's single-window fast path. retain/releaseOne:
-    // the prefix sum returns checkpoint-backed, so the grain cache is
-    // dead on return and self-releases here.
-    val grain = graft.CacheScope.retain(
-      df.filter(col(scoreCol).isNotNull)
+    // distributedPrefixSum's single-window fast path. Retained, not
+    // tracked: the prefix sum returns checkpoint-backed, so the grain
+    // cache is dead on return and self-releases here.
+    val cum = graft.CacheScope.retained { hold =>
+      val grain = hold(df.filter(col(scoreCol).isNotNull)
         .select(col(scoreCol).as("_s"),
           when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("_y"))
         .groupBy("_s").agg(count(lit(1)).as("_c"), sum(col("_y")).as("_p"))
         .cache())
-    val cum =
-      try Relational.distributedPrefixSum(grain, Seq(col("_s")), "_c",
+      Relational.distributedPrefixSum(grain, Seq(col("_s")), "_c",
         knownRows = grain.count())
-      finally graft.CacheScope.releaseOne(grain)
+    }
     val agg = cum.agg(
       sum(col("_p")).as("n_pos"),
       sum(col("_c") - col("_p")).as("n_neg"),

@@ -65,19 +65,6 @@ object ModelSized {
     case _ => false
   }
 
-  /** Estimate-only variant of [[fits]]: decides from schema arithmetic
-    * alone, pricing string/binary columns at Catalyst's 20-byte default
-    * width instead of measuring — for frames whose exact measurement
-    * would trigger recomputation (un-cached model pivots like the NB
-    * wide-count table, whose row count the caller already knows from
-    * training). Nested types still fail conservatively. */
-  def fitsEstimate(schema: StructType, rows: Long): Boolean = {
-    if (rows < 0 || rows > MaxRows) return false
-    val widths = schema.fields.map(f => fixedBytes(f.dataType)
-      .orElse(if (isMeasurable(f.dataType)) Some(20L + 8L) else None))
-    widths.forall(_.isDefined) && rows * widths.map(_.getOrElse(0L)).sum <= maxBytes
-  }
-
   /** True iff a `rows`-row frame with `df`'s schema is model-sized:
     * ≤ [[MaxRows]] AND estimated bytes ≤ [[maxBytes]]. Runs ONE
     * measuring aggregation over `df` only when the schema carries
@@ -101,4 +88,11 @@ object ModelSized {
       .map(i => if (row.isNullAt(i)) 0L else row.getLong(i)).sum
     fixedTotal + varTotal <= maxBytes
   }
+
+  /** The broadcast hint for a join side the planner cannot size (a
+    * loop's checkpointed state, an aggregation): `broadcast` while a
+    * `rows`-row frame with `df`'s schema [[fits]], else identity, which
+    * leaves AQE the shuffle plan. */
+  def hint(df: DataFrame, rows: Long): DataFrame => DataFrame =
+    if (fits(df, rows)) broadcast(_) else identity
 }

@@ -8,16 +8,21 @@ import org.apache.spark.sql.functions._
   * preference votes, A/B eval verdicts, chatbot-arena battles) into a
   * per-item strength score.
   *
-  * [[bradleyTerry]] follows the engine's iterative contract (the
-  * [[Graph]] pattern): a FIXED number of synchronous MM rounds, integer
-  * micro-unit arithmetic throughout (every division is an integral
-  * floor on non-negative operands, wide products ride decimal(38,0)),
-  * `localCheckpoint` per round to truncate lineage, retired rounds'
-  * blocks freed in-loop — so the result is bit-identical across
-  * engines, partitionings, and runs, and the oracle can replay it as an
-  * unrolled CTE chain.
+  * [[bradleyTerry]] runs on [[Iterate]] (the engine's iterative
+  * contract: a FIXED number of synchronous MM rounds, each round
+  * checkpointed, retired rounds freed in-loop) with integer micro-unit
+  * arithmetic throughout (every division is an integral floor on
+  * non-negative operands, wide products ride decimal(38,0)) — so the
+  * result is bit-identical across engines, partitionings, and runs, and
+  * the oracle can replay it as an unrolled CTE chain.
   */
 object Rank {
+
+  /** Loop-frame density for [[Iterate.partitions]]: a BT round does two
+    * broadcast joins plus per-dir-row term arithmetic — roughly 8× denser
+    * than PageRank's long division, whose 2M-row constant left a
+    * 1.8M-duel gate on ONE core (6 s/round vs sub-second at p = 8). */
+  private val RowsPerTask = 250000L
 
   /** Bradley-Terry strength ratings from pairwise outcomes via fixed
     * synchronous rounds of Hunter's MM algorithm (Hunter 2004, "MM
@@ -75,124 +80,97 @@ object Rank {
     val idType = comps.schema(winnerCol).dataType
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val w = Option(weightCol).map(col(_).cast("long")).getOrElse(lit(1L))
-    val c = graft.CacheScope.track(
-      comps.select(col(winnerCol).cast("long").as("_w"), col(loserCol).cast("long").as("_l"),
-          w.as("_k"))
-        .cache())
-    // canonical undirected pair counts — cached so the direction-expanded
-    // loop frame's TWO union legs scan one materialized agg instead of
-    // running the pair aggregation twice (r15)
-    val pairs = graft.CacheScope.track(
-      c.select(least(col("_w"), col("_l")).as("_i"),
-          greatest(col("_w"), col("_l")).as("_j"), col("_k"))
-        .groupBy("_i", "_j").agg(sum(col("_k")).as("_n"))
-        .filter(col("_n") > 0)
-        .cache())
-    // per-item win totals: one map-side-combined pass over the cached raw log
-    val winsDf = c.groupBy("_w").agg(sum(col("_k")).as("_wins"))
-      .withColumnRenamed("_w", "_item")
-    val dirPlan = pairs.select(col("_i").as("_item"), col("_j").as("_opp"), col("_n"))
-      .union(pairs.select(col("_j").as("_item"), col("_i").as("_opp"), col("_n")))
-    def itemsPlan: DataFrame = dirPlan
-      .groupBy("_item").agg(sum(col("_n")).as("_comps"))
-      .join(winsDf, Seq("_item"), "left")
-      .select(col("_item"), coalesce(col("_wins"), lit(0L)).as("_wins"),
-        col("_comps"))
-    def finish(itemsDf: DataFrame, g: DataFrame): DataFrame =
-      itemsDf.join(g, Seq("_item"))
-        .select(col("_item").cast(idType).as("item_id"),
-          col("_g").as("rating_micro"), col("_wins").as("wins"),
-          col("_comps").as("comparisons"))
     // floor division on decimal(38,0) operands (non-negative here) — the
     // engine-wide idiom; a long multiply would overflow past wins ~ 9e6
     def fdiv(a: Column, b: Column): Column = (a - pmod(a, b)).divide(b)
     val scale = dec(lit(1000000000000L)) // 10^12
-    // loop-frame sizing: a BT round does two broadcast joins plus
-    // per-dir-row term arithmetic — roughly 8× denser than PageRank's
-    // long division, so target ~250k duel rows per task
-    // (Graph.iterPartitions' 2M-row constant left a 1.8M-duel gate on
-    // ONE core: measured 6 s/round single-task vs sub-second at p = 8)
-    val p = {
-      val sessionP = c.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(1, math.min(sessionP, ((c.count() + 249999L) / 250000L).toInt))
-    }
-    // the |pairs|×2-row loop frame, partitioned AND sorted on the
-    // per-round aggregation key so no round re-shuffles it
-    val dir = graft.CacheScope.track(
-      dirPlan.repartition(p, col("_item")).sortWithinPartitions("_item").cache())
-    val items = graft.CacheScope.track(
-      itemsPlan.repartition(p, col("_item")).sortWithinPartitions("_item").cache())
-    dir.count()
-    // ONE materializing agg over the items cache: the broadcast-hint size
-    // and the long-vs-decimal dispatch bound. max over an EMPTY items
-    // frame is NULL (an empty duel log — e.g. a drained streaming state
-    // before any data — must yield an empty ratings frame, not an NPE).
-    val iRow = items.agg(count(lit(1)), max(col("_comps"))).head()
-    val nItems = iRow.getLong(0)
-    val maxComps = Option(iRow.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    graft.CacheScope.releaseEarly(c)
-    // γ enters each round as a projection over a localCheckpoint leaf,
-    // whose size statistic is the planner default (huge) — without help
-    // the round's two joins plan as sort-merge and re-shuffle the |dir|
-    // intermediate TWICE per round (measured: the whole round pipeline
-    // 6 s vs sub-second broadcast). Hint broadcast while the item set is
-    // model-sized; past that, let AQE keep the shuffle plan — γ
-    // genuinely no longer fits an executor broadcast. Byte-aware since
-    // r16 ((_item, _g) is all-long: schema arithmetic only).
-    val hint: DataFrame => DataFrame =
-      if (ModelSized.fits(items.select(col("_item"), lit(1000000L).as("_g")), nItems))
-        broadcast(_)
-      else identity
-    // The hot inner loop is |dir| rows × rounds: term + keyed sum. When
-    // every per-item comparison total fits the long budget
-    // (maxComps ≤ 9·10⁶ ⟹ n_ij·10¹² ≤ 9·10¹⁸ for the term,
-    // Σ_j t_ij ≤ comps_i·10¹² ≤ 9·10¹⁸ for the denominator sum, and
-    // wins_i·10¹² ≤ 9·10¹⁸ for the γ' division — all < 2⁶³), the WHOLE
-    // round runs codegen'd long arithmetic: integral `div` computes the
-    // IDENTICAL floor as the decimal fdiv (operands non-negative), and
-    // the long sum provably cannot wrap under the bound (ANSI mode would
-    // throw, not wrap, as the backstop). Past the bound every leg rides
-    // decimal(38,0) exactly as before. r14 dispatched only the term (on
-    // max n_ij) and paid a decimal SUM per round — measured the round
-    // bottleneck; maxComps bounds max n_ij, so the stricter single
-    // dispatch never sends a previously-long term to decimal arithmetic
-    // at any certified SF (sf0.1 maxComps ≈ 10³).
-    // greatest(·, 1): a duel between two zero-rated items (reachable only
-    // under extreme skew — a winning item's rating can floor to 0 when it
-    // carries ≳2·10⁶ duels) must not divide by zero; the huge resulting
-    // term keeps both ratings at the 0 fixed point, and every
-    // non-degenerate case is untouched (γ_i + γ_j ≥ 1 already)
-    val fastLong = maxComps <= 9000000L && !forceDecimal
-    val tTerm =
-      if (fastLong) expr("_n * 1000000000000 div greatest(_gi + _gj, 1)")
-      else fdiv(dec(col("_n")) * scale,
-        dec(greatest(col("_gi") + col("_gj"), lit(1L)))).cast("decimal(38,0)")
-    val dSum = if (fastLong) sum(col("_t")) else sum(dec(col("_t")))
-    // D = 0 can only happen when every per-pair term truncated to zero
-    // (γ_i + γ_j > n·10^12 — needs ~5·10^5+ items sharing one rating
-    // pool); rate 0 deterministically rather than null-poison
-    val gpExpr =
-      if (fastLong) when(col("_D") > 0, expr("_wins * 1000000000000 div _D"))
-        .otherwise(0L)
-      else when(col("_D") > 0,
-        fdiv(dec(col("_wins")) * scale, dec(col("_D"))).cast("long"))
-        .otherwise(0L)
-    // round state: `gp` is the round's UNNORMALIZED ratings checkpoint
-    // (items-sized, feeds the next round twice and the normalization
-    // total once); `gPlan` is γ as a pure projection over it — the
-    // normalization scalars (T, N) are driver literals, so no third
-    // per-round frame is ever materialized. Round 1 enters on the flat
-    // 1,000,000 init over the items cache.
-    var gPlan: DataFrame = items.select(col("_item"), lit(1000000L).as("_g"))
-    var gp: DataFrame = null
-    // r16: alias BOTH columns of BOTH γ legs, so the two broadcast build
-    // sides canonicalize EQUAL (canonical plans erase alias names, but a
-    // bare attribute on one leg is not an alias and blocks the match) —
-    // AQE's stage cache then builds ONE γ broadcast per round and the _gj
-    // join reads a ReusedExchange (the reuse appears only with the
-    // symmetric spelling; pure rename, rows identical — −2.2%/−2.5% on
-    // q184's train, OPTIMIZATION_r16.md §8).
-    for (_ <- 1 to rounds) {
+    graft.CacheScope.retained { hold =>
+      val (dir, items, nItems, maxComps) = graft.CacheScope.retained { raw =>
+        val c = raw(comps.select(col(winnerCol).cast("long").as("_w"),
+          col(loserCol).cast("long").as("_l"), w.as("_k")).cache())
+        // canonical undirected pair counts — cached so the direction-expanded
+        // loop frame's TWO union legs scan one materialized agg instead of
+        // running the pair aggregation twice (r15)
+        val pairs = raw(
+          c.select(least(col("_w"), col("_l")).as("_i"),
+              greatest(col("_w"), col("_l")).as("_j"), col("_k"))
+            .groupBy("_i", "_j").agg(sum(col("_k")).as("_n"))
+            .filter(col("_n") > 0)
+            .cache())
+        // per-item win totals: one map-side-combined pass over the cached raw log
+        val winsDf = c.groupBy("_w").agg(sum(col("_k")).as("_wins"))
+          .withColumnRenamed("_w", "_item")
+        val dirPlan = pairs.select(col("_i").as("_item"), col("_j").as("_opp"), col("_n"))
+          .union(pairs.select(col("_j").as("_item"), col("_i").as("_opp"), col("_n")))
+        val itemsPlan = dirPlan
+          .groupBy("_item").agg(sum(col("_n")).as("_comps"))
+          .join(winsDf, Seq("_item"), "left")
+          .select(col("_item"), coalesce(col("_wins"), lit(0L)).as("_wins"),
+            col("_comps"))
+        val p = Iterate.partitions(c, RowsPerTask)
+        // the |pairs|×2-row loop frame; `items` is tracked, not held:
+        // the returned plan joins it
+        val dir = hold(Iterate.pin(dirPlan, p, "_item"))
+        val items = graft.CacheScope.track(Iterate.pin(itemsPlan, p, "_item"))
+        dir.count()
+        // ONE materializing agg over the items cache: the broadcast-hint size
+        // and the long-vs-decimal dispatch bound. max over an EMPTY items
+        // frame is NULL (an empty duel log — e.g. a drained streaming state
+        // before any data — must yield an empty ratings frame, not an NPE).
+        val iRow = items.agg(count(lit(1)), max(col("_comps"))).head()
+        (dir, items, iRow.getLong(0),
+          Option(iRow.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
+      }
+      // without the hint the round's two γ joins plan as sort-merge and
+      // re-shuffle the |dir| intermediate TWICE per round (measured: the
+      // whole round pipeline 6 s vs sub-second broadcast)
+      val hint = ModelSized.hint(items.select(col("_item"), lit(1000000L).as("_g")), nItems)
+      // The hot inner loop is |dir| rows × rounds: term + keyed sum. When
+      // every per-item comparison total fits the long budget
+      // (maxComps ≤ 9·10⁶ ⟹ n_ij·10¹² ≤ 9·10¹⁸ for the term,
+      // Σ_j t_ij ≤ comps_i·10¹² ≤ 9·10¹⁸ for the denominator sum, and
+      // wins_i·10¹² ≤ 9·10¹⁸ for the γ' division — all < 2⁶³), the WHOLE
+      // round runs codegen'd long arithmetic: integral `div` computes the
+      // IDENTICAL floor as the decimal fdiv (operands non-negative), and
+      // the long sum provably cannot wrap under the bound (ANSI mode would
+      // throw, not wrap, as the backstop). Past the bound every leg rides
+      // decimal(38,0) exactly as before. r14 dispatched only the term (on
+      // max n_ij) and paid a decimal SUM per round — measured the round
+      // bottleneck; maxComps bounds max n_ij, so the stricter single
+      // dispatch never sends a previously-long term to decimal arithmetic
+      // at any certified SF (sf0.1 maxComps ≈ 10³).
+      // greatest(·, 1): a duel between two zero-rated items (reachable only
+      // under extreme skew — a winning item's rating can floor to 0 when it
+      // carries ≳2·10⁶ duels) must not divide by zero; the huge resulting
+      // term keeps both ratings at the 0 fixed point, and every
+      // non-degenerate case is untouched (γ_i + γ_j ≥ 1 already)
+      val fastLong = maxComps <= 9000000L && !forceDecimal
+      val tTerm =
+        if (fastLong) expr("_n * 1000000000000 div greatest(_gi + _gj, 1)")
+        else fdiv(dec(col("_n")) * scale,
+          dec(greatest(col("_gi") + col("_gj"), lit(1L)))).cast("decimal(38,0)")
+      val dSum = if (fastLong) sum(col("_t")) else sum(dec(col("_t")))
+      // D = 0 can only happen when every per-pair term truncated to zero
+      // (γ_i + γ_j > n·10^12 — needs ~5·10^5+ items sharing one rating
+      // pool); rate 0 deterministically rather than null-poison
+      val gpExpr =
+        if (fastLong) when(col("_D") > 0, expr("_wins * 1000000000000 div _D"))
+          .otherwise(0L)
+        else when(col("_D") > 0,
+          fdiv(dec(col("_wins")) * scale, dec(col("_D"))).cast("long"))
+          .otherwise(0L)
+      // One round maps γ to the round's UNNORMALIZED ratings checkpoint
+      // `gp` (items-sized, feeds the next round twice and the normalization
+      // total once) — without this checkpoint the |dir|-row denominator
+      // pipeline would execute three times per round (measured, ~2× round
+      // cost already at two).
+      // r16: alias BOTH columns of BOTH γ legs, so the two broadcast build
+      // sides canonicalize EQUAL (canonical plans erase alias names, but a
+      // bare attribute on one leg is not an alias and blocks the match) —
+      // AQE's stage cache then builds ONE γ broadcast per round and the _gj
+      // join reads a ReusedExchange (the reuse appears only with the
+      // symmetric spelling; pure rename, rows identical — −2.2%/−2.5% on
+      // q184's train, OPTIMIZATION_r16.md §8).
       // NOT the pageRank r16 union/fold case (measured, q184's duels,
       // whole-train interleaved n=7, OPTIMIZATION_r16.md §9): riding
       // `_wins` on the dir frame so γ' projects straight off the
@@ -201,39 +179,41 @@ object Rank {
       // broadcast joins and the partial aggregation of the |dir|-row
       // hot path, while the items join this removes is a cheap V-row
       // AQE-broadcast. The per-round items join stays.
-      val denom = dir
-        .join(hint(gPlan.select(col("_item").as("_item"), col("_g").as("_gi"))), Seq("_item"))
-        .join(hint(gPlan.select(col("_item").as("_opp"), col("_g").as("_gj"))), Seq("_opp"))
-        .select(col("_item"), tTerm.as("_t"))
-        .groupBy("_item").agg(dSum.as("_D"))
-      // materialize the UNNORMALIZED ratings once per round: gp feeds
-      // the normalization total and both next-round broadcast sides —
-      // without this checkpoint the |dir|-row denominator pipeline above
-      // would execute three times per round (measured, ~2× round cost
-      // already at two)
-      val gpNext = items
-        .join(denom, Seq("_item"))
-        .select(col("_item"), gpExpr.as("_gp"))
-        .localCheckpoint()
-      // the normalization scalars: an items-grain 2-value fetch off the
-      // just-materialized checkpoint (model-sized by definition — the
-      // same class as the q185/q189 budget scalars), never corpus data.
+      def round(gPlan: DataFrame): Iterate.Checkpoint = {
+        val denom = dir
+          .join(hint(gPlan.select(col("_item").as("_item"), col("_g").as("_gi"))), Seq("_item"))
+          .join(hint(gPlan.select(col("_item").as("_opp"), col("_g").as("_gj"))), Seq("_opp"))
+          .select(col("_item"), tTerm.as("_t"))
+          .groupBy("_item").agg(dSum.as("_D"))
+        Iterate.checkpoint(items
+          .join(denom, Seq("_item"))
+          .select(col("_item"), gpExpr.as("_gp")))
+      }
+      // γ as a pure projection over `gp`: the normalization scalars (T, N)
+      // are an items-grain 2-value fetch off the just-materialized
+      // checkpoint (model-sized by definition — the same class as the
+      // q185/q189 budget scalars), never corpus data, and re-enter as
+      // literals, so no third per-round frame is ever materialized.
       // sum over an EMPTY frame is NULL → T = 0 → the all-zero branch,
       // exactly the crossJoin form's `when(_T > 0)` fallback.
-      val tRow = gpNext.agg(sum(dec(col("_gp"))), count(lit(1))).head()
-      val totT = Option(tRow.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-      val totN = tRow.getLong(1)
-      if (gp != null) graft.CacheScope.releaseLocalCheckpoint(gp)
-      gp = gpNext
-      gPlan =
+      def normalize(gp: DataFrame): DataFrame = {
+        val tRow = gp.agg(sum(dec(col("_gp"))), count(lit(1))).head()
+        val totT = Option(tRow.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+        val totN = tRow.getLong(1)
         if (totT.signum > 0)
           gp.select(col("_item"),
             fdiv(dec(col("_gp")) * dec(lit(totN)) * dec(lit(1000000L)),
               dec(lit(totT))).cast("long").as("_g"))
         else gp.select(col("_item"), lit(0L).as("_g"))
+      }
+      // round 1 enters on the flat 1,000,000 init over the items cache
+      val g = Iterate.rounds(round(items.select(col("_item"), lit(1000000L).as("_g"))),
+        rounds - 1, normalize)(round)
+      items.join(g, Seq("_item"))
+        .select(col("_item").cast(idType).as("item_id"),
+          col("_g").as("rating_micro"), col("_wins").as("wins"),
+          col("_comps").as("comparisons"))
     }
-    graft.CacheScope.trackCheckpoint(gp)
-    finish(items, gPlan)
   }
 
   /** Spearman rank correlation between two scores of the same keyed

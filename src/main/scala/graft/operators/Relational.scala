@@ -1014,10 +1014,9 @@ object Relational {
     *
     * `knownRows` (r15): callers whose input is an already-cached,
     * grain-collapsed frame (score grain, item grain — the metric/rank
-    * family) pass its row count; at or under [[SmallWindowRows]] (the
-    * engine's model-sized bound, the same 2M the
-    * [[graft.operators.Rank.bradleyTerry]] broadcast hint uses) the
-    * prefix sum runs as ONE single-task global window instead of the
+    * family) pass its row count; while the frame is model-sized
+    * ([[ModelSized.fits]] — the bound the iterative operators' broadcast
+    * hints use: at most [[ModelSized.MaxRows]] rows) the prefix sum runs as ONE single-task global window instead of the
     * 4-job two-phase machinery (range-sample, persist, offset collect,
     * checkpoint join). Identical results: same strict order, same
     * default RANGE frame (tie blocks accumulate together in BOTH paths
@@ -1025,7 +1024,6 @@ object Relational {
     * range partitioner never splits equal keys). −1 (default) or a
     * count past the bound takes the distributed path — corpus-grain
     * consumers (sequentialPack, concurrencySweep) never pass a count. */
-  val SmallWindowRows = 2000000L
   private[graft] def distributedPrefixSum(df: DataFrame, order: Seq[Column],
       valueCol: String, knownRows: Long = -1L): DataFrame = {
     val spark = df.sparkSession
@@ -1034,20 +1032,20 @@ object Relational {
     // frame carries wide keys; ModelSized adds the 64 MB estimate test
     // (schema arithmetic for fixed-width frames, one measuring agg over
     // the caller's already-cached frame when strings are present)
-    if (knownRows >= 0 && knownRows <= SmallWindowRows && ModelSized.fits(df, knownRows))
+    if (ModelSized.fits(df, knownRows))
       return graft.CacheScope.trackCheckpoint(
         df.withColumn("_cum_incl",
           sum(col(valueCol)).over(Window.orderBy(order: _*)))
           .localCheckpoint())
-    // retain/releaseOne, not bare persist/unpersist: concurrent sessions
-    // share this cache entry by canonical plan, and a recompute after a
+    // retained, not bare persist/unpersist: concurrent sessions share
+    // this cache entry by canonical plan, and a recompute after a
     // premature unpersist would RE-SAMPLE the range partitioner mid-query
     // (the one recompute in the engine that can change results)
-    val w = graft.CacheScope.retain(df.repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
+    graft.CacheScope.retained { hold =>
+      val w = hold(df.repartitionByRange(order: _*)
+        .sortWithinPartitions(order: _*)
+        .withColumn("_pid", spark_partition_id())
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val pidTotals = w.groupBy("_pid").agg(sum(col(valueCol)).as("_ps"))
         .orderBy("_pid").collect().map(r => (r.getInt(0), r.getLong(1)))
       val offsets = pidTotals.map(_._1).zip(
@@ -1060,7 +1058,7 @@ object Relational {
           .withColumn("_cum_incl", col("_off") + cumIn)
           .drop("_pid", "_off")
           .localCheckpoint())
-    } finally graft.CacheScope.releaseOne(w)
+    }
   }
 
   /** Pareto / ABC classification: aggregate `valueCol` per key, rank
@@ -1085,16 +1083,16 @@ object Relational {
     require(cuts.map(_._2) == cuts.map(_._2).sorted, "cuts must be non-decreasing")
     // cached (r15): key-grain totals feed the prefix sum — the count
     // makes a model-sized key universe take the single-window fast
-    // path. retain/releaseOne: the prefix sum returns checkpoint-backed,
-    // so the totals cache is dead on return and self-releases here.
-    val totals = graft.CacheScope.retain(
-      df.select(col(keyCol).as("_k"), col(valueCol).cast("long").as("_v"))
+    // path. Retained, not tracked: the prefix sum returns
+    // checkpoint-backed, so the totals cache is dead on return and
+    // self-releases here.
+    val cum = graft.CacheScope.retained { hold =>
+      val totals = hold(df.select(col(keyCol).as("_k"), col(valueCol).cast("long").as("_v"))
         .groupBy("_k").agg(sum(col("_v")).as("total"))
         .cache())
-    val cum =
-      try distributedPrefixSum(totals,
+      distributedPrefixSum(totals,
         Seq(col("total").desc, col("_k")), "total", knownRows = totals.count())
-      finally graft.CacheScope.releaseOne(totals)
+    }
     // the grand total is the last inclusive prefix — one cheap job over
     // the checkpoint-backed result, no second pass over the base frame
     val grandRow = cum.agg(max(col("_cum_incl"))).head()

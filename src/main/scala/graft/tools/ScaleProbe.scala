@@ -788,7 +788,7 @@ object ScaleProbe {
     time("association rules 1x (100k events)")(arX(1))
     time("association rules 10x (1M events, 10x sessions)")(arX(10))
     // iterative-graph operators on SYNTHETIC graphs far past the gate's
-    // 6k-edge kNN graph: validates that iterPartitions picks multi-task
+    // 6k-edge kNN graph: validates that Iterate.partitions picks multi-task
     // partitioning and rounds stay O(|E|) when the edge list is
     // millions of rows (the co-partitioned round-8 design at real size)
     def synthEdges(k: Int): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{CacheScope, SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The CacheScope contract, asserted: every operator that persists an
@@ -154,6 +155,12 @@ class CacheLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("bradleyTerry releases its caches and the final-round checkpoint") {
+    assertReleasedAfter(expectTracked = true) {
+      Rank.bradleyTerry(btDuels, "w", "l", rounds = 3).count()
+    }
+  }
+
   test("releaseLocalCheckpoint frees blocks that Dataset.unpersist silently cannot") {
     CacheScope.release()
     val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -218,22 +225,69 @@ class CacheLifecycleSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponents frees each retired round's checkpoint blocks in-loop") {
-    CacheScope.release()
-    val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private def prEdges = spark.range(200)
+    .select(col("id").as("s"), ((col("id") * 7) % 100).as("d"))
+  private def lpSeeds = spark.range(0, 100, 10)
+    .select(col("id"), (col("id") % 3).cast("int").as("lbl"))
+  private def btDuels = spark.range(300)
+    .select((col("id") % 17).as("w"), ((col("id") * 7 + 3) % 17).as("l"))
+    .filter(col("w") =!= col("l"))
+
+  /** The checkpointed iterative operators, each with its result's row
+    * count and the number of persisted RDDs its materialized result may still hold before the
+    * harness release(): the final round's checkpoint, plus — for
+    * bradleyTerry only — the `items` cache its returned plan joins.
+    * Retired rounds and the loop-pinned frames must already be gone. */
+  private lazy val iterative: Seq[(String, Int => DataFrame, Long, Int)] = Seq(
     // a 64-node path graph needs several pointer-jump rounds — if retired
     // rounds leaked, more than the final round's blocks would survive
-    val edges = spark.range(63)
-      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val cc = Dedup.connectedComponents(edges, "id_a", "id_b")
-    assert(cc.count() == 64)
-    val live = leaked(baseline)
-    assert(live.size <= 1,
-      s"only the result's own checkpoint may remain after the loop: $live")
-    CacheScope.release()
-    assert(leaked(baseline).isEmpty,
-      "the result checkpoint must be freed by the harness release()")
-  }
+    ("connectedComponents", _ => Dedup.connectedComponents(
+      spark.range(63).select(col("id").as("id_a"), (col("id") + 1).as("id_b")),
+      "id_a", "id_b"), 64L, 1),
+    ("pageRank", n => Graph.pageRank(prEdges, "s", "d", iterations = n), 200L, 1),
+    ("labelPropagation", n => Graph.labelPropagation(prEdges, "s", "d", lpSeeds,
+      "id", "lbl", rounds = n), 200L, 1),
+    ("bradleyTerry", n => Rank.bradleyTerry(btDuels, "w", "l", rounds = n), 16L, 2))
+
+  for ((name, run, rows, keep) <- iterative)
+    test(s"$name frees each retired round's checkpoint blocks in-loop") {
+      CacheScope.release()
+      val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      assert(run(4).count() == rows)
+      val live = leaked(baseline)
+      assert(live.size <= keep,
+        s"only the result's own checkpoint${if (keep > 1) " and items" else ""} " +
+          s"may remain after the loop: $live")
+      CacheScope.release()
+      assert(leaked(baseline).isEmpty,
+        "the result checkpoint must be freed by the harness release()")
+    }
+
+  // A round that throws must not strand the live round's checkpoint: the
+  // operator's job group is cancelled (with every later job in it) at the
+  // first job after round 1 — the job count of a one-round call, plus one.
+  // Checkpoint blocks are invisible to release() unless tracked, so a
+  // stranded checkpoint survives it. A job cancelled inside a checkpoint's
+  // own materialization would leave that checkpoint's RDD marked
+  // persistent with no blocks and no handle to free it; round 2's first
+  // job is a broadcast or shuffle-stage job, which runs before the
+  // checkpoint marks its RDD, so normally nothing remains — if the cancel
+  // lands late, at most that one block-less RDD may.
+  for ((name, run, _, _) <- iterative if name != "connectedComponents")
+    test(s"$name frees the live round checkpoint when a round fails") {
+      CacheScope.release()
+      val oneRound = JobWatch.run(spark)(run(1))
+      assert(oneRound.result.isRight, s"one-round call failed: ${oneRound.result}")
+      CacheScope.release()
+      val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val failed = JobWatch.run(spark, cancelAt = oneRound.jobs + 1)(run(3))
+      assert(failed.result.isLeft, "the cancelled call must throw")
+      CacheScope.release()
+      val left = leaked(baseline)
+      val holdingBlocks = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      assert(left.size <= 1 && left.keySet.forall(id => !holdingBlocks(id)),
+        s"persisted RDDs survived a failed round and release(): $left")
+    }
 
   test("shared scope defers unpersists: entries survive any member's release, last exit drains") {
     // The r13 opt-in shared-scope contract: while ANY member is active,

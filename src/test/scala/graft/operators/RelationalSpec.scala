@@ -309,7 +309,7 @@ class RelationalSpec extends SparkSpec {
 
   test("distributedPrefixSum: knownRows fast path equals the two-phase path, ties included") {
     import org.apache.spark.sql.functions.col
-    // r15 dispatch pin: at/under SmallWindowRows the prefix sum runs as
+    // r15 dispatch pin: while ModelSized.fits the prefix sum runs as
     // one single-task global window; both paths must agree row-for-row —
     // INCLUDING tie groups (both use the default RANGE frame, so every
     // member of a tie block carries the block-inclusive sum).
@@ -318,7 +318,7 @@ class RelationalSpec extends SparkSpec {
     def run(known: Long) = Relational.distributedPrefixSum(
         rows, Seq(col("_v"), col("_k")), "_c", knownRows = known)
       .collect().map(r => (r.getLong(0), r.getLong(3))).sorted.toSeq
-    val fast = run(known = 6L)      // ≤ SmallWindowRows → single window
+    val fast = run(known = 6L)      // model-sized → single window
     graft.CacheScope.release()
     val dist = run(known = -1L)     // default → two-phase machinery
     graft.CacheScope.release()
